@@ -48,8 +48,8 @@ def _d_tok(v: float) -> str:
     """SQL token for one double literal. Finite values use repr()'s
     shortest round-trip digits with the D suffix; non-finite values have
     no typed-literal spelling (repr gives 'nan'/'inf', and 'nanD' fails to
-    resolve as a column — r15 ADVICE), so they go through the double()
-    cast, which Spark folds to the exact special value."""
+    resolve as a column), so they go through the double() cast, which
+    Spark folds to the exact special value."""
     v = float(v)
     if math.isfinite(v):
         return f"{v!r}D"
@@ -494,7 +494,7 @@ def _pq_codebooks(
     inner = ",".join(
         "array("
         + ",".join(
-            "array(" + ",".join(f"{v!r}D" for v in code) + ")" for code in cbj
+            "array(" + ",".join(_d_tok(v) for v in code) + ")" for code in cbj
         )
         + ")"
         for cbj in cb

@@ -6,7 +6,7 @@ just a configured SparkSession — Catalyst/Tungsten replace the blink planner a
 runtime wholesale.
 
 Settings rationale (targets a 1000-executor cluster even though tests run
-local[32]):
+locally on one host):
 - AQE on: runtime re-planning (skew-join splitting, partition coalescing,
   broadcast demotion) is the single biggest scale lever Spark has.
 - shuffle.partitions sized to cores locally; on a real cluster this would be
@@ -42,6 +42,33 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+def host_defaults() -> tuple[int, str]:
+    """(local cores, driver memory) for this host. `SPARK_GRAFT_CPUS` and
+    `SPARK_GRAFT_DRIVER_MEM` override; otherwise the cores this process may
+    run on, and an eighth of physical memory clamped to 1-4 GB (the driver
+    JVM is also the only executor, and the Python workers need room beside
+    it)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if cpus is None:
+        try:
+            cpus = len(os.sched_getaffinity(0))
+        except AttributeError:  # no affinity API on this platform
+            cpus = os.cpu_count() or 1
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem is None:
+        mem_mb = 8192
+        try:
+            with open("/proc/meminfo") as fh:
+                for line in fh:
+                    if line.startswith("MemTotal:"):
+                        mem_mb = int(line.split()[1]) // 1024
+                        break
+        except OSError:
+            pass
+        mem = f"{max(1024, min(4096, mem_mb // 8))}m"
+    return int(cpus), mem
+
+
 def apply_runtime_confs(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
     """Apply runtime-settable confs; safe on sessions we didn't build."""
     for k, v in RUNTIME_CONFS.items():
@@ -50,7 +77,7 @@ def apply_runtime_confs(spark: SparkSession, shuffle_partitions: int | None = No
         except Exception:
             pass  # static conf on this build — builder path sets it instead
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = host_defaults()[0]
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     except Exception:
@@ -59,22 +86,23 @@ def apply_runtime_confs(spark: SparkSession, shuffle_partitions: int | None = No
 
 
 def get_spark(app_name: str = "flink_parent_spark", cpus: int | None = None) -> SparkSession:
-    """Build (or fetch) the session used by tests and bench."""
+    """Build (or fetch) the session used by tests, tools and perfbench."""
+    default_cpus, driver_mem = host_defaults()
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus
     import tempfile  # noqa: PLC0415
 
     tmp = tempfile.gettempdir()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(cpus))
         # keep regenerable JVM litter out of the repo root: embedded
         # Derby writes derby.log to the process CWD and managed tables
         # default their warehouse to ./spark-warehouse — point both at
-        # the (bench-swept) fps_* namespace under the system tmp dir.
+        # the fps_* namespace under the system tmp dir.
         .config(
             "spark.driver.extraJavaOptions",
             f"-Dderby.stream.error.file={tmp}/fps_derby.log",

@@ -658,3 +658,44 @@ def test_greedy_quantifier_at_end_supported(spark):
     """
     out = match_recognize_sql(df, clause, "event_id").toPandas()
     assert [(r["first_c"], r["n"]) for _, r in out.iterrows()] == [(1, 3)]
+
+
+def test_mr_and_or_short_circuit_guarded_division():
+    """AND/OR compile to lazy conditional expressions, so a guarded
+    division must not raise when the guard already decides — and the
+    Kleene truth tables must be unchanged."""
+    from flink_parent_spark.streaming.match_recognize_sql import (
+        _MR_GLOBALS,
+        _MrCompiler,
+        _and,
+        _and_f,
+        _or,
+        _or_f,
+    )
+
+    # lazy completion helpers reproduce the eager Kleene tables exactly
+    for a in (True, False, None):
+        for b in (True, False, None):
+            lazy_and = (
+                False if (a is not None and not a) else _and_f(a, b)
+            )
+            lazy_or = True if (a is not None and a) else _or_f(a, b)
+            assert lazy_and == _and(a, b)
+            assert lazy_or == _or(a, b)
+
+    # a guard of FALSE must skip the guarded division (the eager form
+    # raised ZeroDivisionError here); TRUE guard must evaluate it
+    def run(expr_src):
+        comp = _MrCompiler(expr_src, "define", set(), dtypes={})
+        src, _ = comp.compile()
+        return eval(  # noqa: S307 - mirrors the engine's own eval harness
+            compile(src, "<t>", "eval"), dict(_MR_GLOBALS), {}
+        )
+
+    assert run("1 <> 1 AND 10 / 0 > 1") is False
+    assert run("1 = 1 OR 10 / 0 > 1") is True
+    with pytest.raises(ZeroDivisionError):
+        run("1 = 1 AND 10 / 0 > 1")
+    # nested chains: inner walrus names must not clobber outer ones
+    assert run("1 = 1 AND (2 = 2 OR 10 / 0 > 1)") is True
+    assert run("(1 <> 1 AND 10 / 0 > 1) OR 3 = 3") is True

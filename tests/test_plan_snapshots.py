@@ -16,7 +16,13 @@ import os
 
 import pytest
 
-from tools.plan_snapshots import SF_DIR, SNAP_DIR, SNAPSHOT_QUERIES, plan_for
+from tools.plan_snapshots import (
+    SF_DIR,
+    SNAP_DIR,
+    SNAPSHOT_QUERIES,
+    normalize_plan,
+    plan_for,
+)
 
 
 @pytest.mark.parametrize("name", SNAPSHOT_QUERIES)
@@ -47,3 +53,23 @@ def test_snapshot_dir_has_no_orphans():
     battery (a renamed query must not leave a stale golden file)."""
     files = {f[:-4] for f in os.listdir(SNAP_DIR) if f.endswith(".txt")}
     assert files == set(SNAPSHOT_QUERIES)
+
+
+def test_normalize_plan_masks_only_the_partition_count():
+    """The trailing count of a partitioning call depends on the session's
+    shuffle setting and is masked; literals inside its keys are plan shape
+    and stay, e.g. the 0 of coalesce(x, 0)."""
+    raw = (
+        "Arguments: hashpartitioning(coalesce(i_brand_id#12L, 0), "
+        "isnull(i_brand_id#12L), coalesce(i_class_id#13L, 0), 32), "
+        "ENSURE_REQUIREMENTS, [plan_id=71]\n"
+        "Arguments: rangepartitioning(x#4 ASC NULLS FIRST, 4), "
+        "ENSURE_REQUIREMENTS, [plan_id=9]\n"
+    )
+    assert normalize_plan(raw) == (
+        "Arguments: hashpartitioning(coalesce(i_brand_id#L, 0), "
+        "isnull(i_brand_id#L), coalesce(i_class_id#L, 0), N), "
+        "ENSURE_REQUIREMENTS, [plan_id=]\n"
+        "Arguments: rangepartitioning(x# ASC NULLS FIRST, N), "
+        "ENSURE_REQUIREMENTS, [plan_id=]\n"
+    )

@@ -18,12 +18,13 @@ Usage: python tools/check_parity.py [--gate] [--json] [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_parent_spark.queries.catalog import all_oracles, all_queries  # noqa: E402
 from flink_parent_spark.session import get_spark  # noqa: E402

@@ -79,6 +79,27 @@ SNAPSHOT_QUERIES = [
 ]
 
 
+_PARTITIONING = re.compile(r"(?:hash|range)partitioning\(")
+
+
+def _mask_partition_counts(s: str) -> str:
+    """Replace the trailing count of every hash/range partitioning call
+    with N. Walks balanced parentheses, so nested calls such as
+    coalesce(x, 0) keep their arguments; a call that does not close on its
+    line is left alone."""
+    out, pos = [], 0
+    for m in _PARTITIONING.finditer(s):
+        depth = 1
+        for i in range(m.end(), len(s)):
+            depth += {"(": 1, ")": -1}.get(s[i], 0)
+            if depth == 0 or s[i] == "\n":
+                break
+        if depth == 0:
+            out.append(s[pos:m.end()] + re.sub(r", \d+$", ", N", s[m.end():i]))
+            pos = i
+    return "".join(out) + s[pos:]
+
+
 def normalize_plan(s: str) -> str:
     """Strip everything session- or machine-dependent from a formatted
     physical plan so snapshots compare across runs and hosts."""
@@ -93,13 +114,9 @@ def normalize_plan(s: str) -> str:
     s = re.sub(
         r"(file:)?/[^\s\],]*/([^/\s\],]+)", r"<path>/\2", s
     )
-    # partition counts follow the session's shuffle setting (8 in tests,
-    # 32 in bench), not the plan shape
-    s = re.sub(
-        r"(hashpartitioning|rangepartitioning)\((.*?), \d+\)",
-        r"\1(\2, N)",
-        s,
-    )
+    # partition counts follow the session's shuffle setting, not the plan
+    # shape
+    s = _mask_partition_counts(s)
     s = re.sub(r"REPARTITION(_BY_NUM)?\(\d+\)", r"REPARTITION(N)", s)
     # InMemoryFileIndex may enumerate a machine-dependent number of files
     s = re.sub(r"InMemoryFileIndex \[([^\]]*)\.{3}[^\]]*\]",
