@@ -223,7 +223,6 @@ def minhash_lsh_pairs(
     k: int = 16,
     bands: int = 4,
     verify_threshold: float | None = 0.5,
-    max_band_freq: int | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs: docs sharing at least one band digest
     (k/bands rows per band). If verify_threshold is set, candidates are
@@ -233,18 +232,7 @@ def minhash_lsh_pairs(
     Scale shape: signature + banding are shuffle-free map work over the
     corpus scan; the only shuffles are the band-key equi-join (candidate
     generation) and the verify joins, both scaling with candidates, not
-    with the O(n^2) pair space.
-
-    Skew guard (`max_band_freq`): the band self-join pairs every document
-    sharing a band digest, so a band shared by m docs emits ~m^2/2
-    candidate rows in ONE task — a boilerplate-heavy or short-doc corpus
-    at 100 TB puts thousands of near-identical signatures into one band
-    and that straggler does quadratic work. With `max_band_freq` set,
-    bands hotter than the cap are dropped before the join (the same guard
-    the Jaccard path applies via `max_shingle_freq`; in both cases a
-    member of a dropped-hot group is still found through its OTHER
-    bands/shingles unless every one is hot). Default None keeps the exact
-    all-candidates semantics."""
+    with the O(n^2) pair space."""
     rows_per_band = k // bands
     # shared doc-level shingle-hash arrays: persisted so the signature and
     # verify branches scan/shingle/md5 the corpus once (at cluster scale
@@ -272,14 +260,6 @@ def minhash_lsh_pairs(
         ]
     )
     banded = sig_doc.select("__id", F.explode(band_keys).alias("band_key"))
-    if max_band_freq is not None:
-        hot = (
-            banded.groupBy("band_key")
-            .count()
-            .filter(F.col("count") > max_band_freq)
-            .select("band_key")
-        )
-        banded = banded.join(hot, "band_key", "left_anti")
     a = banded.select(F.col("__id").alias("id_a"), "band_key")
     b = banded.select(F.col("__id").alias("id_b"), "band_key")
     cand = (

@@ -411,7 +411,7 @@ def _register_over(i: int, rng: random.Random) -> None:
     excluded for RANGE frames where SQL cannot express the peer tiebreak
     (nondeterministic under ties)."""
     # frame is STRUCTURAL by index (mr's streaming-alternation discipline)
-    # so each of the four frame operators keeps a pinned config; all other
+    # so each of the four frames keeps a pinned config; all other
     # params are drawn
     frame = ("unbounded", "range", "rows", "range_unbounded")[i % 4]
     key_sql, key_col, key_alias = _key(rng)
@@ -513,41 +513,20 @@ def _register_over(i: int, rng: random.Random) -> None:
     def run(spark, sf_dir, frame=frame, frame_arg=frame_arg,
             key_col=key_col, key_alias=key_alias, aggs=aggs):
         from flink_parent_spark.streaming.stateful import (  # noqa: PLC0415
-            streaming_over_range_bounded,
-            streaming_over_range_unbounded,
-            streaming_over_rows_bounded,
-            streaming_over_running_sum,
+            streaming_over,
         )
 
-        wm = (
-            ("ts", "0 seconds")
-            if frame in ("range", "range_unbounded")
-            else None
-        )
+        is_range = frame in ("range", "range_unbounded")
+        wm = ("ts", "0 seconds") if is_range else None
         ev = stream_table(spark, sf_dir, "events", watermark=wm)
         ev = ev.withColumn(key_alias, key_col()).select(
             key_alias, "ts", "value", "event_id"
         )
-        if frame == "unbounded":
-            out = streaming_over_running_sum(
-                ev, [key_alias], "ts", "value", ["event_id"],
-                tiebreak_col="event_id", aggs=aggs,
-            )
-        elif frame == "range_unbounded":
-            out = streaming_over_range_unbounded(
-                ev, [key_alias], "ts", "value", ["event_id"],
-                tiebreak_col="event_id", aggs=aggs,
-            )
-        elif frame == "range":
-            out = streaming_over_range_bounded(
-                ev, [key_alias], "ts", "value", frame_arg, ["event_id"],
-                tiebreak_col="event_id", aggs=aggs,
-            )
-        else:
-            out = streaming_over_rows_bounded(
-                ev, [key_alias], "ts", "value", frame_arg, ["event_id"],
-                tiebreak_col="event_id", aggs=aggs,
-            )
+        out = streaming_over(
+            ev, [key_alias], "ts", "value",
+            ("range" if is_range else "rows", frame_arg), aggs, ["event_id"],
+            tiebreak_col="event_id",
+        )
         return run_stream_to_df(out, "append")
 
     register(f"streamfuzz_over_{i}", run, oracle)
@@ -1117,7 +1096,7 @@ SHAPES: "dict[str, tuple[int, int, object]]" = {
     "ivjoin": (0x57F7, 2, _register_ivjoin),
     # round 11 — the reference's remaining stream-ITCase families
     # (OverWindowITCase / TemporalJoinITCase / MatchRecognizeITCase)
-    # over count 4 (late r12): one pinned config per frame operator —
+    # over count 4 (late r12): one pinned config per OVER frame —
     # rows-unbounded running, event-time RANGE-bounded, ROWS-bounded, and
     # the new RANGE-UNBOUNDED (SQL default ORDER BY frame, peers share)
     "over": (0x57F8, 4, _register_over),

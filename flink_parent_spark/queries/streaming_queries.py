@@ -20,7 +20,7 @@ from flink_parent_spark.streaming.cep import AfterMatchSkip, Pattern, cep_patter
 from flink_parent_spark.streaming.core import run_stream_to_df, stream_table
 from flink_parent_spark.streaming.stateful import (
     streaming_dedup,
-    streaming_over_running_sum,
+    streaming_over,
     streaming_top_n,
 )
 from flink_parent_spark.tables import load_tables
@@ -192,7 +192,10 @@ def stream_topn_per_type(spark, sf_dir):
 )
 def stream_over_running_sum(spark, sf_dir):
     ev = stream_table(spark, sf_dir, "events")
-    ov = streaming_over_running_sum(ev, ["user_id"], "ts", "value", ["event_id"])
+    ov = streaming_over(
+        ev, ["user_id"], "ts", "value", ("rows", None),
+        [("sum", "running_sum"), ("count", "running_cnt")], ["event_id"],
+    )
     return run_stream_to_df(ov, "append")
 
 
@@ -1007,11 +1010,11 @@ def stream_over_range_bounded(spark, sf_dir):
     (RowTimeRangeBoundedPrecedingFunction parity): trailing 1-hour sum and
     count per user, peers at the same timestamp aggregated together, state
     bounded by the range. Full replay must equal the batch RANGE window."""
-    from flink_parent_spark.streaming.stateful import streaming_over_range_bounded
-
     ev = stream_table(spark, sf_dir, "events", watermark=("ts", "0 seconds"))
-    out = streaming_over_range_bounded(
-        ev, ["user_id"], "ts", "value", 3600, ["event_id"], tiebreak_col="event_id"
+    out = streaming_over(
+        ev, ["user_id"], "ts", "value", ("range", 3600),
+        [("sum", "range_sum"), ("count", "range_cnt")], ["event_id"],
+        tiebreak_col="event_id",
     )
     return run_stream_to_df(out, "append")
 
@@ -1081,11 +1084,11 @@ def stream_over_rows_bounded(spark, sf_dir):
     """ROWS-bounded streaming OVER (ProcTime/RowTimeRowsBoundedPreceding
     parity): trailing-5-rows sum and count per user, ring-buffer state of
     exactly the frame size. Full replay equals the batch ROWS window."""
-    from flink_parent_spark.streaming.stateful import streaming_over_rows_bounded
-
     ev = stream_table(spark, sf_dir, "events")
-    out = streaming_over_rows_bounded(
-        ev, ["user_id"], "ts", "value", 5, ["event_id"], tiebreak_col="event_id"
+    out = streaming_over(
+        ev, ["user_id"], "ts", "value", ("rows", 5),
+        [("sum", "frame_sum"), ("count", "frame_cnt")], ["event_id"],
+        tiebreak_col="event_id",
     )
     return run_stream_to_df(out, "append")
 
@@ -1113,16 +1116,15 @@ def stream_over_mixed_aggs(spark, sf_dir):
     SELECT item; OverWindowITCase.scala's mixed agg lists;
     Min/MaxWithRetractAggFunction retraction handled here by the ring
     buffer being the live frame). Full replay equals the batch window."""
-    from flink_parent_spark.streaming.stateful import streaming_over_rows_bounded
-
     ev = stream_table(spark, sf_dir, "events")
-    out = streaming_over_rows_bounded(
-        ev, ["user_id"], "ts", "value", 8, ["event_id"],
-        tiebreak_col="event_id",
-        aggs=[
+    out = streaming_over(
+        ev, ["user_id"], "ts", "value", ("rows", 8),
+        [
             ("min", "o_min"), ("max", "o_max"), ("avg", "o_avg"),
             ("last_value", "o_last"), ("count", "o_cnt"),
         ],
+        ["event_id"],
+        tiebreak_col="event_id",
     )
     return run_stream_to_df(out, "append")
 
@@ -1147,15 +1149,12 @@ def stream_over_range_unbounded(spark, sf_dir):
     4th cell of the reference's rows/range × bounded/unbounded matrix).
     O(1) accumulator state per key; peer groups fire when the watermark
     seals their timestamp. Full replay equals the batch RANGE window."""
-    from flink_parent_spark.streaming.stateful import (
-        streaming_over_range_unbounded,
-    )
-
     ev = stream_table(spark, sf_dir, "events", watermark=("ts", "0 seconds"))
-    out = streaming_over_range_unbounded(
-        ev, ["user_id"], "ts", "value", ["event_id"],
+    out = streaming_over(
+        ev, ["user_id"], "ts", "value", ("range", None),
+        [("sum", "cum_sum"), ("count", "cum_cnt"), ("max", "cum_max")],
+        ["event_id"],
         tiebreak_col="event_id",
-        aggs=[("sum", "cum_sum"), ("count", "cum_cnt"), ("max", "cum_max")],
     )
     return run_stream_to_df(out, "append")
 
@@ -1203,16 +1202,15 @@ def stream_over_var_distinct(spark, sf_dir):
     squares exceeds int64 and persists as a decimal string). Full replay
     equals the batch window; NULL rows (first-row LAG, single-row sample
     stddev) are true NULLs."""
-    from flink_parent_spark.streaming.stateful import streaming_over_running_sum
-
     ev = stream_table(spark, sf_dir, "events")
-    out = streaming_over_running_sum(
-        ev, ["user_id"], "ts", "value", ["event_id"],
-        tiebreak_col="event_id",
-        aggs=[
+    out = streaming_over(
+        ev, ["user_id"], "ts", "value", ("rows", None),
+        [
             ("var_pop", "o_var_pop"), ("stddev_samp", "o_stddev_samp"),
             ("distinct_count", "o_distinct"), ("lag", "o_lag"),
         ],
+        ["event_id"],
+        tiebreak_col="event_id",
     )
     return run_stream_to_df(out, "append")
 

@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from flink_parent_spark.streaming.stateful import _to_ms
+
 Row = dict[str, Any]
 # A predicate takes (row) or (row, ctx) — the matcher inspects arity once.
 Predicate = Callable[..., bool]
@@ -1062,9 +1064,6 @@ def cep_pattern_stream_watermarked(
         "emitted bigint, ctx int"
     )
 
-    def to_ms(ts) -> int:
-        return int(pd.Timestamp(ts).value // 1_000_000)
-
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
         import numpy as np  # noqa: PLC0415
 
@@ -1079,7 +1078,7 @@ def cep_pattern_stream_watermarked(
                 # Flink CEP drops elements at/behind the watermark —
                 # vectorized (one datetime64 column op) instead of a
                 # per-row pd.Timestamp conversion; the [ms] cast floors
-                # exactly like to_ms() and is unit-proof (ns/us inputs)
+                # exactly like _to_ms() and is unit-proof (ns/us inputs)
                 ms = (
                     pdf[ts_col]
                     .to_numpy()
@@ -1131,7 +1130,7 @@ def cep_pattern_stream_watermarked(
             # (non-context) rows arm the timer
             if len(remainder) > new_ctx:
                 state.setTimeoutTimestamp(
-                    max(wm_ms + 1, to_ms(remainder[new_ctx][ts_col]))
+                    max(wm_ms + 1, _to_ms(remainder[new_ctx][ts_col]))
                 )
         elif state.exists:
             state.remove()

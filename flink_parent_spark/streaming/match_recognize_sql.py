@@ -91,12 +91,11 @@ from __future__ import annotations
 import datetime as dt
 import re
 from dataclasses import dataclass as _dataclass
-from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, functions as F
 
 from flink_parent_spark.streaming.cep import AfterMatchSkip, Pattern, cep_pattern
-from flink_parent_spark.streaming.stateful import _micros_double
+from flink_parent_spark.streaming.stateful import _micros_double, _to_micros
 
 _SECTION_RE = re.compile(
     r"(?:PARTITION\s+BY\s+(?P<part>[\w,\s]+?)\s+)?"
@@ -145,15 +144,6 @@ _NAV_DETECT = re.compile(
 # expression engine (MatchCodeGenerator.scala's generated-code semantics,
 # re-expressed as compiled Python over a match-navigation context)
 # --------------------------------------------------------------------------
-
-_Q6 = Decimal("0.000001")
-
-
-def _micros(v) -> int:
-    """Quantize a numeric value to exact integer micros (ROUND_HALF_UP) —
-    the same fixed-point contract the streaming OVER aggregates use."""
-    return int(Decimal(float(v)).quantize(_Q6, rounding=ROUND_HALF_UP) * 1_000_000)
-
 
 def _val(fn, row):
     """Evaluate a row function with SQL NULL semantics: a missing operand
@@ -318,7 +308,7 @@ class MrEval:
         if micros:
             # float accumulation: exact integer-micros sum, ONE conversion
             # to a correctly-rounded double (never a bare division)
-            s = sum(_micros(v) for v in vals)
+            s = sum(_to_micros(v) for v in vals)
             d = _micros_double(s)
             return d if op == "sum" else d / len(vals)
         s = sum(vals)

@@ -8,19 +8,21 @@ Each mirrors a reference runtime operator's algorithm (not its code):
 - streaming_dedup      <- DeduplicateKeepFirstRowFunction.java /
   DeduplicateKeepLastRowFunction.java (.../operators/deduplicate/): per-key
   single-row state; keep-first emits once, keep-last emits the newest row.
-- streaming_over_agg   <- RowTimeRowsUnboundedPrecedingFunction.java
-  (.../operators/over/): per-key running accumulator ordered by event time.
+- streaming_over       <- the {ProcTime,RowTime}{Rows,Range}{Bounded,
+  Unbounded}PrecedingFunction family (.../operators/over/): ONE operator
+  over the four frames (rows/range x bounded/unbounded), one accumulator.
 
 State layout notes (the 100 TB angle): state is one entry per key (dedup,
-over-agg accumulator) or N rows per key (top-n) — bounded, no per-event
-growth; exactly the state discipline the reference's operators enforce. The
-GroupStateTimeout hooks are where TTL / idle-state retention plugs in
-(StateTtlConfig parity).
+unbounded OVER accumulator), the live frame per key (bounded OVER) or N
+rows per key (top-n) — bounded, no per-event growth; exactly the state
+discipline the reference's operators enforce. The GroupStateTimeout hooks
+are where TTL / idle-state retention plugs in (StateTtlConfig parity).
 """
 
 from __future__ import annotations
 
 import math
+from collections import Counter, deque
 from collections.abc import Iterator, Sequence
 from decimal import ROUND_HALF_UP, Decimal
 from typing import Any
@@ -34,6 +36,20 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 def _schema_of(df: DataFrame, cols: Sequence[str]) -> str:
     dt = dict(df.dtypes)
     return ", ".join(f"`{c}` {dt[c]}" for c in cols)
+
+
+def _to_ms(ts) -> int:
+    """Event time -> epoch milliseconds (the watermark's unit), floored."""
+    return int(pd.Timestamp(ts).value // 1_000_000)
+
+
+_Q6 = Decimal("0.000001")
+
+
+def _to_micros(v) -> int:
+    """Quantize a numeric value to exact integer micros (ROUND_HALF_UP) —
+    the DECIMAL(.., 6) cast the SQL oracles apply."""
+    return int(Decimal(float(v)).quantize(_Q6, rounding=ROUND_HALF_UP) * 1_000_000)
 
 
 def streaming_top_n(
@@ -112,9 +128,6 @@ def streaming_dedup(
     first = keep == "first"
     ttl_ms = ttl_seconds * 1000 if ttl_seconds is not None else None
 
-    def to_ms(ts) -> int:
-        return int(pd.Timestamp(ts).value // 1_000_000)
-
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -152,7 +165,7 @@ def streaming_dedup(
             rec = sub.loc[[idx]].to_dict("records")[0]
             if cur is None or (not first and rec[order_col] >= cur[order_col]):
                 cur = rec
-                written_ms = to_ms(rec[order_col]) if ttl_ms is not None else 0
+                written_ms = _to_ms(rec[order_col]) if ttl_ms is not None else 0
                 emitted = [rec]
         state.update((tuple(cur[c] for c in out_cols), written_ms))
         if ttl_ms is not None:
@@ -214,12 +227,11 @@ def streaming_updatable_top_n(
     # arrival values persist with the live row so cross-batch ordering is
     # decided by data, not delivery
     live_cols = list(dict.fromkeys([*data_cols, *arrival_cols]))
-    dt = dict(sdf.dtypes)
-    out_schema = ", ".join(f"`{c}` {dt[c]}" for c in data_cols) + ", `rank` int"
+    out_schema = _schema_of(sdf, data_cols) + ", `rank` int"
     state_schema = (
-        "live array<struct<" + ", ".join(f"{c}: {dt[c]}" for c in live_cols) + ">>, "
+        "live array<struct<" + _schema_of(sdf, live_cols).replace("`", "") + ">>, "
         "emitted array<struct<"
-        + ", ".join(f"{c}: {dt[c]}" for c in data_cols)
+        + _schema_of(sdf, data_cols).replace("`", "")
         + ", rank: int>>"
     )
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
@@ -308,9 +320,8 @@ def streaming_retract_top_n(
     channels are FIFO end-to-end); the parquet-hop composition model this
     engine uses for multi-stage changelog pipelines does."""
     data_cols = list(dict.fromkeys([*key_cols, order_col, *payload_cols]))
-    dt = dict(changelog.dtypes)
-    out_schema = ", ".join(f"`{c}` {dt[c]}" for c in data_cols) + ", `rank` int"
-    row_struct = "array<struct<" + ", ".join(f"{c}: {dt[c]}" for c in data_cols) + ">>"
+    out_schema = _schema_of(changelog, data_cols) + ", `rank` int"
+    row_struct = "array<struct<" + _schema_of(changelog, data_cols).replace("`", "") + ">>"
     state_schema = f"buf {row_struct}, pend {row_struct}"
     sign_plus = ("+I", "+U")
     # at equal sequence a row's -U refers to the row inserted at that same
@@ -363,19 +374,14 @@ def streaming_retract_top_n(
     )
 
 
-#: the declarative aggregate set the streaming OVER operators support —
+#: the declarative aggregate set the streaming OVER operator supports —
 #: the reference plugs generated AggsHandleFunctions into its over
 #: operators (RowTimeRangeBoundedPrecedingFunction.java:277) drawn from
 #: the planner's aggfunctions (Sum/Count/Avg/Min/MaxWithRetract/
-#: FirstValue/LastValue); here the frame buffer IS the retraction store,
-#: so MIN/MAX recompute over the live frame (bounded by it) and the
-#: unbounded frame uses monotone accumulators (append-only input never
-#: retracts, so no retract variant is needed there). Completed r12+:
-#: VAR/STDDEV (pop+samp) via the decimal-exact sum/sum² split the
-#: reference's planner rewrite produces (AggregateReduceFunctionsRule),
-#: COUNT(DISTINCT) via a distinct-value accumulator (DistinctAccumulator
-#: parity — frame-set for bounded frames, persisted set for unbounded),
-#: and LAG (LeadLagAggFunction) from the previous partition row.
+#: FirstValue/LastValue), VAR/STDDEV (pop+samp) via the decimal-exact
+#: sum/sum² split the planner's AggregateReduceFunctionsRule produces,
+#: COUNT(DISTINCT) (DistinctAccumulator parity) and LAG
+#: (LeadLagAggFunction — the previous partition row, not frame-derived).
 _OVER_AGGS = (
     "sum", "count", "avg", "min", "max", "first_value", "last_value",
     "var_pop", "var_samp", "stddev_pop", "stddev_samp",
@@ -389,6 +395,9 @@ _OVER_NULLABLE = frozenset(("var_samp", "stddev_samp", "lag"))
 
 #: integer-typed emits
 _OVER_BIGINT = frozenset(("count", "distinct_count"))
+
+#: the variance family — the only aggregates that need sum²
+_OVER_VAR = frozenset(("var_pop", "var_samp", "stddev_pop", "stddev_samp"))
 
 
 def _micros_double(n: int, scale: int = 6) -> float:
@@ -408,58 +417,6 @@ def _micros_double(n: int, scale: int = 6) -> float:
     sign = "-" if n < 0 else ""
     q, r = divmod(abs(n), 10 ** scale)
     return float(f"{sign}{q}.{r:0{scale}d}")
-
-
-def _over_var(vals: "list[int]", ddof: int):
-    """Variance over quantized micros via the decimal-exact sum/sum² split
-    (the engine's cross-engine exactness contract, registry.py: both sums
-    are exact integers, converted once each to correctly-rounded doubles,
-    then combined with a FIXED double op order that the SQL oracle
-    mirrors literally — (sx2 - sx*sx/n) / (n - ddof))."""
-    n = len(vals)
-    if n <= ddof:
-        return None  # sample variance of a single row is NULL in SQL
-    sd = _micros_double(sum(vals))
-    s2d = _micros_double(sum(v * v for v in vals), 12)
-    nd = float(n)
-    num = s2d - sd * sd / nd
-    return num / (nd - 1.0) if ddof else num / nd
-
-
-def _over_agg_value(fn: str, vals: "list[int]"):
-    """One aggregate over a frame snapshot of integer-micros values in
-    frame order (oldest..newest). Exact decimal accumulation; only the
-    final emit converts to double. (`lag` is not frame-derived — the
-    operators track the previous partition row separately.)"""
-    if fn == "sum":
-        return _micros_double(sum(vals))
-    if fn == "count":
-        return len(vals)
-    if fn == "avg":
-        return _micros_double(sum(vals)) / len(vals)
-    if fn == "min":
-        return _micros_double(min(vals))
-    if fn == "max":
-        return _micros_double(max(vals))
-    if fn == "first_value":
-        return _micros_double(vals[0])
-    if fn == "last_value":
-        return _micros_double(vals[-1])
-    if fn == "var_pop":
-        return _over_var(vals, 0)
-    if fn == "var_samp":
-        return _over_var(vals, 1)
-    if fn == "stddev_pop":
-        v = _over_var(vals, 0)
-        # GREATEST(.., 0) guard against fp cancellation — mirrored in the
-        # oracle SQL so both engines clamp identically
-        return math.sqrt(max(v, 0.0))
-    if fn == "stddev_samp":
-        v = _over_var(vals, 1)
-        return None if v is None else math.sqrt(max(v, 0.0))
-    if fn == "distinct_count":
-        return len(set(vals))
-    raise ValueError(f"unsupported streaming OVER aggregate: {fn}")
 
 
 def _over_agg_schema(agg_list: "list[tuple[str, str]]") -> str:
@@ -483,607 +440,261 @@ def _over_emit_series(fn: str, values: list, index=None) -> "pd.Series":
     return pd.Series(values, index=index, dtype="float64")
 
 
-def streaming_over_range_bounded(
-    sdf: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str,
-    value_col: str,
-    range_seconds: int,
-    payload_cols: Sequence[str] = (),
-    tiebreak_col: str | None = None,
-    aggs: "Sequence[tuple[str, str]] | None" = None,
-) -> DataFrame:
-    """Streaming OVER (PARTITION BY key ORDER BY ts RANGE BETWEEN `range`
-    PRECEDING AND CURRENT ROW) with a pluggable aggregate list.
+class _OverAcc:
+    """The one OVER frame accumulator, in exact integer micros: sum,
+    count, sum² (VAR/STDDEV), the DISTINCT multiset, min/max, first and
+    last. `add` accumulates a row; `evict` retracts the rows that left a
+    bounded frame (the reference's retractable AggsHandleFunctions).
 
-    `aggs` is a list of (fn, out_col) with fn in {sum, count, avg, min,
-    max, first_value, last_value} — the reference's declarative set for
-    its over operators (generated AggsHandleFunctions;
-    MinWithRetractAggFunction/MaxWithRetractAggFunction retract via the
-    same state the frame buffer holds here). Defaults to the legacy
-    sum+count pair (range_sum, range_cnt). NOTE on first/last_value under
-    RANGE frames: peers (rows sharing a timestamp) enter in tiebreak
-    order, so with duplicate timestamps per key the result is only
-    deterministic given a tiebreak_col — same caveat as the reference's
-    nondeterministic-ordering note for RANGE frames.
+    `span` is the frame bound: a row count (ROWS), a range in micros
+    (RANGE) or None (unbounded). A bounded frame is rebuilt from its
+    persisted (ts, micros) buffer once per batch — MIN/MAX through
+    monotonic deques keyed by buffer position (amortized O(1) sliding
+    extremum), DISTINCT through a multiplicity map — so per-key state is
+    bounded by the frame. An unbounded frame is append-only, so it
+    persists O(1) scalars (monotone min/max, latched first) plus the
+    distinct set only when COUNT(DISTINCT) is requested; sum² can exceed
+    int64 and persists as a decimal string."""
 
-    RowTimeRangeBoundedPrecedingFunction.java:277 parity (algorithm, not
-    code): per key, a state buffer of (ts, value) inside the trailing range
-    window; rows process in event-time order, all rows sharing a timestamp
-    aggregate together (SQL RANGE peer semantics), and buffer entries older
-    than ts - range are evicted as the window slides, so state is bounded
-    by the range, not the stream. Accumulation in integer micros (exact,
-    restart-safe).
+    def __init__(self, fns: "set[str]", rows: bool, span, snap) -> None:
+        buf, acc, cnt, s2, mn, mx, first, dvals = snap
+        self.rows, self.span = rows, span
+        self.var = bool(fns & _OVER_VAR)
+        self.distinct = "distinct_count" in fns
+        self.want_min, self.want_max = "min" in fns, "max" in fns
+        self.last = None
+        if span is None:
+            self.buf = None
+            self.acc, self.cnt, self.s2 = acc, cnt, int(s2)
+            self.mn, self.mx, self.first = mn, mx, first
+            self.dc = Counter(dvals)
+            return
+        self.buf, self.minq, self.maxq = deque(), deque(), deque()
+        self.base = self.acc = self.cnt = self.s2 = 0
+        self.dc = Counter()
+        for t, m in buf:
+            self.add(t, m)
 
-    When the input carries a watermark, rows are HELD until sealed
-    (event time <= watermark) and processed in event-time order on
-    watermark advance — the reference's fire-per-timestamp-on-watermark
-    behavior, which keeps cross-batch out-of-order rows (within the delay)
-    correct; rows later than an already-fired timestamp are dropped like
-    the reference's late elements. Without a watermark the operator
-    processes each batch in event-time order immediately (arrival-order
-    semantics, exact for single-batch replay)."""
-    out_cols = list(dict.fromkeys([*key_cols, ts_col, value_col, *payload_cols]))
-    agg_list = list(aggs) if aggs else [("sum", "range_sum"), ("count", "range_cnt")]
-    out_schema = _schema_of(sdf, out_cols) + _over_agg_schema(agg_list)
-    state_schema = (
-        "pend array<struct<" + _schema_of(sdf, out_cols).replace("`", "") + ">>, "
-        "buf array<struct<ts: timestamp, v: bigint>>, frontier bigint, "
-        "prev bigint"
-    )
-    _Q = Decimal("0.000001")
-    import datetime as _dt
+    def add(self, t: int, m: int) -> None:
+        self.acc += m
+        self.cnt += 1
+        self.last = m
+        if self.var:
+            self.s2 += m * m
+        if self.distinct:
+            self.dc[m] += 1
+        if self.buf is None:
+            if self.first is None:
+                self.first = m
+            self.mn = m if self.mn is None or m < self.mn else self.mn
+            self.mx = m if self.mx is None or m > self.mx else self.mx
+            return
+        pos = self.base + len(self.buf)
+        self.buf.append((t, m))
+        if self.want_min:
+            while self.minq and self.minq[-1][1] >= m:
+                self.minq.pop()
+            self.minq.append((pos, m))
+        if self.want_max:
+            while self.maxq and self.maxq[-1][1] <= m:
+                self.maxq.pop()
+            self.maxq.append((pos, m))
 
-    rng = _dt.timedelta(seconds=range_seconds)
-    held = "EventTimeWatermark" in sdf._jdf.queryExecution().logical().toString()
+    def evict(self, t: int) -> None:
+        """Retract what left the frame ending at `t`: ROWS keeps the last
+        `span` rows, RANGE the rows at or after t - span."""
+        buf = self.buf
+        if buf is None:
+            return
+        while buf and (
+            len(buf) > self.span if self.rows else buf[0][0] < t - self.span
+        ):
+            m = buf.popleft()[1]
+            self.base += 1
+            self.acc -= m
+            self.cnt -= 1
+            if self.var:
+                self.s2 -= m * m
+            if self.distinct:
+                self.dc[m] -= 1
+                if not self.dc[m]:
+                    del self.dc[m]
+        while self.minq and self.minq[0][0] < self.base:
+            self.minq.popleft()
+        while self.maxq and self.maxq[0][0] < self.base:
+            self.maxq.popleft()
 
-    def to_ms(ts) -> int:
-        return int(pd.Timestamp(ts).value // 1_000_000)
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        pend_rows, buf, frontier, prev = (
-            (list(state.get[0]), list(state.get[1]), state.get[2], state.get[3])
-            if state.exists
-            else ([], [], -(2**62), None)
-        )
-        pend = [dict(zip(out_cols, r)) for r in pend_rows]
-        for pdf in pdfs:
-            for rec in pdf[out_cols].to_dict("records"):
-                # late element: its timestamp already fired (reference drop)
-                if to_ms(rec[ts_col]) <= frontier:
-                    continue
-                pend.append(rec)
-        wm_ms = state.getCurrentWatermarkMs() if held else 0
-        if held:
-            sealed = [r for r in pend if to_ms(r[ts_col]) <= wm_ms]
-            pend = [r for r in pend if to_ms(r[ts_col]) > wm_ms]
+    def value(self, fn: str):
+        """One aggregate over the current frame. Only the emit converts
+        to double, once per exact sum, and the variance family combines
+        the doubles in the fixed op order the SQL oracles mirror
+        literally: (sx2 - sx*sx/n) / (n - ddof), GREATEST(.., 0) under
+        the square root."""
+        md, buf = _micros_double, self.buf
+        if fn == "sum":
+            return md(self.acc)
+        if fn == "count":
+            return self.cnt
+        if fn == "avg":
+            return md(self.acc) / self.cnt
+        if fn == "min":
+            return md(self.mn if buf is None else self.minq[0][1])
+        if fn == "max":
+            return md(self.mx if buf is None else self.maxq[0][1])
+        if fn == "first_value":
+            return md(self.first if buf is None else buf[0][1])
+        if fn == "last_value":
+            return md(self.last)
+        if fn == "distinct_count":
+            return len(self.dc)
+        sd, nd = md(self.acc), float(self.cnt)
+        num = md(self.s2, 12) - sd * sd / nd
+        if fn in ("var_pop", "stddev_pop"):
+            v = num / nd
+        elif self.cnt < 2:
+            return None  # sample variance of a single row is NULL in SQL
         else:
-            sealed, pend = pend, []
-        sealed.sort(
-            key=lambda r: (r[ts_col], r[tiebreak_col] if tiebreak_col else 0)
+            v = num / (nd - 1.0)
+        return v if fn.startswith("var") else math.sqrt(max(v, 0.0))
+
+    def snapshot(self) -> tuple:
+        if self.buf is not None:
+            return (list(self.buf), 0, 0, "0", None, None, None, [])
+        return (
+            [], self.acc, self.cnt, str(self.s2), self.mn, self.mx,
+            self.first, sorted(self.dc),
         )
-        emit: dict[str, list] = {c: [] for _, c in agg_list}
-        # Incremental frame accumulators, restored from the persisted
-        # buffer ONCE per batch — the reference's retractable
-        # AggsHandleFunctions (accumulate on append, retract on evict)
-        # instead of an O(frame) recompute per peer group, which is
-        # O(frame²) per batch at volume. MIN/MAX use monotonic deques
-        # (the sliding-window-extremum structure — the deque front is the
-        # frame extremum, amortized O(1)); DISTINCT a multiplicity map.
-        # Everything stays exact integer micros, so emitted values are
-        # bit-identical to the recompute.
-        from collections import Counter, deque  # noqa: PLC0415
-
-        fns = {f for f, _ in agg_list}
-        wants_var = fns & {"var_pop", "var_samp", "stddev_pop", "stddev_samp"}
-        wants_distinct = "distinct_count" in fns
-        wants_min = "min" in fns
-        wants_max = "max" in fns
-        acc = sum(bv for _, bv in buf)
-        cnt = len(buf)
-        s2 = sum(bv * bv for _, bv in buf) if wants_var else 0
-        dcounts: Counter = (
-            Counter(bv for _, bv in buf) if wants_distinct else Counter()
-        )
-        minq: deque = deque()
-        maxq: deque = deque()
-        if wants_min or wants_max:
-            for bt, bv in buf:
-                if wants_min:
-                    while minq and minq[-1][1] >= bv:
-                        minq.pop()
-                    minq.append((bt, bv))
-                if wants_max:
-                    while maxq and maxq[-1][1] <= bv:
-                        maxq.pop()
-                    maxq.append((bt, bv))
-        plans = [(fn_name, emit[cname]) for fn_name, cname in agg_list]
-        md = _micros_double
-        i = 0
-        while i < len(sealed):
-            # peer group: all rows at this timestamp enter the buffer first
-            j = i
-            t = sealed[i][ts_col]
-            lags: list[float | None] = []  # per-row: LAG crosses peers
-            while j < len(sealed) and sealed[j][ts_col] == t:
-                v = sealed[j][value_col]
-                m = int(
-                    Decimal(float(v)).quantize(_Q, rounding=ROUND_HALF_UP)
-                    * 1_000_000
-                )
-                buf.append((t, m))
-                acc += m
-                cnt += 1
-                if wants_var:
-                    s2 += m * m
-                if wants_distinct:
-                    dcounts[m] += 1
-                if wants_min:
-                    while minq and minq[-1][1] >= m:
-                        minq.pop()
-                    minq.append((t, m))
-                if wants_max:
-                    while maxq and maxq[-1][1] <= m:
-                        maxq.pop()
-                    maxq.append((t, m))
-                lags.append(None if prev is None else md(prev))
-                prev = m
-                j += 1
-            lo = t - rng
-            k = 0
-            nbuf = len(buf)
-            while k < nbuf and buf[k][0] < lo:
-                ev = buf[k][1]
-                acc -= ev
-                cnt -= 1
-                if wants_var:
-                    s2 -= ev * ev
-                if wants_distinct:
-                    dcounts[ev] -= 1
-                    if not dcounts[ev]:
-                        del dcounts[ev]
-                k += 1
-            if k:
-                del buf[:k]
-            while minq and minq[0][0] < lo:
-                minq.popleft()
-            while maxq and maxq[0][0] < lo:
-                maxq.popleft()
-            npeers = j - i
-            for fn_name, col in plans:
-                if fn_name == "lag":
-                    # previous row in (ts, tiebreak) order — per-row, not
-                    # per-peer-group (deterministic only given tiebreak_col,
-                    # the RANGE-frame caveat documented above)
-                    col.extend(lags)
-                    continue
-                if fn_name == "sum":
-                    val = md(acc)
-                elif fn_name == "count":
-                    val = cnt
-                elif fn_name == "avg":
-                    val = md(acc) / cnt
-                elif fn_name == "min":
-                    val = md(minq[0][1])
-                elif fn_name == "max":
-                    val = md(maxq[0][1])
-                elif fn_name == "first_value":
-                    val = md(buf[0][1])
-                elif fn_name == "last_value":
-                    val = md(buf[-1][1])
-                elif fn_name == "distinct_count":
-                    val = len(dcounts)
-                else:  # variance family — the fixed oracle op order
-                    sd = md(acc)
-                    s2d = md(s2, 12)
-                    nd = float(cnt)
-                    num = s2d - sd * sd / nd
-                    if fn_name == "var_pop":
-                        val = num / nd
-                    elif fn_name == "stddev_pop":
-                        val = math.sqrt(max(num / nd, 0.0))
-                    elif cnt < 2:
-                        val = None
-                    elif fn_name == "var_samp":
-                        val = num / (nd - 1.0)
-                    else:  # stddev_samp
-                        val = math.sqrt(max(num / (nd - 1.0), 0.0))
-                col.extend([val] * npeers)
-            i = j
-        if sealed:
-            frontier = max(frontier, to_ms(sealed[-1][ts_col]))
-        state.update(
-            (
-                [tuple(r[c] for c in out_cols) for r in pend],
-                buf,
-                frontier,
-                prev,
-            )
-        )
-        if held and pend:
-            state.setTimeoutTimestamp(
-                max(wm_ms + 1, min(to_ms(r[ts_col]) for r in pend))
-            )
-        out = pd.DataFrame(sealed, columns=out_cols)
-        for fn_name, cname in agg_list:
-            out[cname] = _over_emit_series(fn_name, emit[cname])
-        yield out
-
-    return sdf.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.EventTimeTimeout if held else GroupStateTimeout.NoTimeout,
-    )
 
 
-def streaming_over_range_unbounded(
+def streaming_over(
     sdf: DataFrame,
     key_cols: Sequence[str],
     ts_col: str,
     value_col: str,
+    frame: "tuple[str, int | None]",
+    aggs: "Sequence[tuple[str, str]]",
     payload_cols: Sequence[str] = (),
     tiebreak_col: str | None = None,
-    aggs: "Sequence[tuple[str, str]] | None" = None,
 ) -> DataFrame:
-    """Streaming OVER (PARTITION BY key ORDER BY ts RANGE UNBOUNDED
-    PRECEDING) — SQL's DEFAULT frame when ORDER BY is present, so every
-    `agg(x) OVER (PARTITION BY k ORDER BY ts)` a user writes lands here:
-    all rows sharing a timestamp (peers) aggregate TOGETHER and share one
-    result, unlike the ROWS-unbounded running frame where each row sees
-    only its prefix.
+    """Streaming OVER aggregation (PARTITION BY key ORDER BY ts) over one
+    cell of the reference's rows/range × bounded/unbounded matrix, with a
+    pluggable aggregate list `aggs` of (fn, out_col), fn in _OVER_AGGS:
 
-    RowTimeRangeUnboundedPrecedingFunction.java parity (the 4th cell of
-    the reference's rows/range × bounded/unbounded over matrix; the other
-    three are streaming_over_running_sum / _rows_bounded /
-    _range_bounded): O(1) accumulator state per key — sum/count/sum² in
-    exact integer micros, monotone min/max, latched first — plus the
-    distinct-value set only when requested; no row buffer, because an
-    append-only unbounded frame never retracts. Peer groups fire once the
-    watermark seals the timestamp (same hold/ordering machinery as the
-    bounded range operator); `last_value` is the final peer in tiebreak
-    order and `lag` stays per-row (both deterministic only given
-    tiebreak_col — the RANGE-frame caveat)."""
+    - ("rows", n):     ROWS BETWEEN n-1 PRECEDING AND CURRENT ROW
+    - ("rows", None):  ROWS UNBOUNDED PRECEDING (running aggregate)
+    - ("range", s):    RANGE BETWEEN s seconds PRECEDING AND CURRENT ROW
+    - ("range", None): RANGE UNBOUNDED PRECEDING (SQL's default ORDER BY
+      frame)
+
+    RowTime{Rows,Range}{Bounded,Unbounded}PrecedingFunction parity
+    (algorithm, not code): per key one `_OverAcc`; ROWS frames treat
+    every row as its own peer group and evict by count, RANGE frames
+    aggregate all rows sharing a timestamp together (SQL RANGE peers —
+    they share one result) and evict rows older than ts - range, boundary
+    inclusive. LAG stays per-row (the previous row in (ts, tiebreak)
+    order). Values accumulate as exact integer micros (restart-safe).
+
+    ROWS frames process each batch in (ts, tiebreak) order at once
+    (AvailableNow replay delivers whole batches; the sort plays the
+    reference's out-of-order buffer). RANGE frames drop rows at or behind
+    the already-fired frontier (the reference's late elements) and, when
+    the input carries a watermark, HOLD rows until the watermark seals
+    their timestamp, then fire in event-time order — keeping cross-batch
+    out-of-order rows within the delay correct. Without a watermark they
+    process each batch at once. first/last_value/lag under RANGE frames
+    are deterministic only given a tiebreak_col (peers enter in tiebreak
+    order — the reference's RANGE nondeterminism caveat)."""
+    kind, bound = frame
+    if kind not in ("rows", "range"):
+        raise ValueError(f"unsupported streaming OVER frame: {frame!r}")
+    rows = kind == "rows"
+    agg_list = list(aggs)
     out_cols = list(dict.fromkeys([*key_cols, ts_col, value_col, *payload_cols]))
-    agg_list = (
-        list(aggs) if aggs else [("sum", "range_sum"), ("count", "range_cnt")]
-    )
     out_schema = _schema_of(sdf, out_cols) + _over_agg_schema(agg_list)
     state_schema = (
         "pend array<struct<" + _schema_of(sdf, out_cols).replace("`", "") + ">>, "
-        "frontier bigint, acc bigint, cnt bigint, s2 string, mn bigint, "
-        "mx bigint, first bigint, dvals array<bigint>, prev bigint"
+        "frontier bigint, buf array<struct<ts: bigint, v: bigint>>, "
+        "acc bigint, cnt bigint, s2 string, mn bigint, mx bigint, "
+        "first bigint, dvals array<bigint>, prev bigint"
     )
-    _Q = Decimal("0.000001")
-    held = "EventTimeWatermark" in sdf._jdf.queryExecution().logical().toString()
-    wants_distinct = any(fn == "distinct_count" for fn, _ in agg_list)
-    wants_var = any(
-        fn in ("var_pop", "var_samp", "stddev_pop", "stddev_samp")
-        for fn, _ in agg_list
+    fns = {f for f, _ in agg_list}
+    span = bound if rows or bound is None else bound * 1_000_000
+    held = not rows and (
+        "EventTimeWatermark" in sdf._jdf.queryExecution().logical().toString()
     )
-
-    def to_ms(ts) -> int:
-        return int(pd.Timestamp(ts).value // 1_000_000)
+    sort_cols = [ts_col, tiebreak_col] if tiebreak_col else [ts_col]
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        md = _micros_double
         if state.exists:
-            (pend_rows, frontier, acc, cnt, s2_str, mn, mx, first,
-             dvals, prev) = state.get
-            pend_rows = list(pend_rows)
+            pend, frontier, *snap, prev = state.get
         else:
-            pend_rows, frontier = [], -(2**62)
-            acc, cnt, s2_str, mn, mx, first, dvals, prev = (
-                0, 0, "0", None, None, None, [], None
+            pend, frontier, prev = [], -(2**62), None
+            snap = ([], 0, 0, "0", None, None, None, [])
+        acc = _OverAcc(fns, rows, span, snap)
+        if rows:
+            frames = [pdf[out_cols] for pdf in pdfs]
+            out = (
+                pd.concat(frames).sort_values(sort_cols)
+                if frames
+                else pd.DataFrame(columns=out_cols)
             )
-        s2 = int(s2_str)
-        dset: set[int] = set(dvals) if wants_distinct else set()
-        pend = [dict(zip(out_cols, r)) for r in pend_rows]
-        for pdf in pdfs:
-            for rec in pdf[out_cols].to_dict("records"):
-                if to_ms(rec[ts_col]) <= frontier:  # late: already fired
-                    continue
-                pend.append(rec)
-        wm_ms = state.getCurrentWatermarkMs() if held else 0
-        if held:
-            sealed = [r for r in pend if to_ms(r[ts_col]) <= wm_ms]
-            pend = [r for r in pend if to_ms(r[ts_col]) > wm_ms]
         else:
-            sealed, pend = pend, []
-        sealed.sort(
-            key=lambda r: (r[ts_col], r[tiebreak_col] if tiebreak_col else 0)
-        )
+            recs = [dict(zip(out_cols, r)) for r in pend]
+            for pdf in pdfs:
+                recs += [
+                    r for r in pdf[out_cols].to_dict("records")
+                    if _to_ms(r[ts_col]) > frontier  # late: already fired
+                ]
+            if held:
+                wm_ms = state.getCurrentWatermarkMs()
+                sealed = [r for r in recs if _to_ms(r[ts_col]) <= wm_ms]
+                pend = [r for r in recs if _to_ms(r[ts_col]) > wm_ms]
+            else:
+                sealed, pend = recs, []
+            sealed.sort(
+                key=lambda r: (r[ts_col], r[tiebreak_col] if tiebreak_col else 0)
+            )
+            out = pd.DataFrame(sealed, columns=out_cols)
+        ts = out[ts_col].to_numpy("datetime64[us]").astype("int64").tolist()
+        vals = out[value_col].tolist()
         emit: dict[str, list] = {c: [] for _, c in agg_list}
         i = 0
-        while i < len(sealed):
-            j = i
-            t = sealed[i][ts_col]
-            lags: list[float | None] = []
-            last_m = None
-            while j < len(sealed) and sealed[j][ts_col] == t:
-                v = sealed[j][value_col]
-                m = int(
-                    Decimal(float(v)).quantize(_Q, rounding=ROUND_HALF_UP)
-                    * 1_000_000
-                )
-                lags.append(None if prev is None else md(prev))
-                prev = m
-                acc += m
-                cnt += 1
-                if wants_var:
-                    # gate the big-int squared accumulation (and its
-                    # ever-growing serialized state string) on a variance
-                    # aggregate actually being requested
-                    s2 += m * m
-                mn = m if mn is None or m < mn else mn
-                mx = m if mx is None or m > mx else mx
-                if first is None:
-                    first = m
-                if wants_distinct:
-                    dset.add(m)
-                last_m = m
+        while i < len(ts):
+            j = i + 1
+            while not rows and j < len(ts) and ts[j] == ts[i]:
                 j += 1
+            lags = []
+            for v in vals[i:j]:
+                m = _to_micros(v)
+                lags.append(None if prev is None else _micros_double(prev))
+                acc.add(ts[i], m)
+                prev = m
+            acc.evict(ts[i])
             for fn_name, cname in agg_list:
-                if fn_name == "lag":
-                    emit[cname].extend(lags)
-                    continue
-                if fn_name == "sum":
-                    val = _micros_double(acc)
-                elif fn_name == "count":
-                    val = cnt
-                elif fn_name == "avg":
-                    val = _micros_double(acc) / cnt
-                elif fn_name == "min":
-                    val = md(mn)
-                elif fn_name == "max":
-                    val = md(mx)
-                elif fn_name == "first_value":
-                    val = md(first)
-                elif fn_name == "last_value":
-                    val = md(last_m)
-                elif fn_name == "distinct_count":
-                    val = len(dset)
-                else:  # variance family — the fixed oracle op order
-                    sd = _micros_double(acc)
-                    s2d = _micros_double(s2, 12)
-                    nd = float(cnt)
-                    num = s2d - sd * sd / nd
-                    if fn_name == "var_pop":
-                        val = num / nd
-                    elif fn_name == "stddev_pop":
-                        val = math.sqrt(max(num / nd, 0.0))
-                    elif cnt < 2:
-                        val = None
-                    elif fn_name == "var_samp":
-                        val = num / (nd - 1.0)
-                    else:  # stddev_samp
-                        val = math.sqrt(max(num / (nd - 1.0), 0.0))
-                emit[cname].extend([val] * (j - i))
+                emit[cname].extend(
+                    lags if fn_name == "lag" else [acc.value(fn_name)] * (j - i)
+                )
             i = j
-        if sealed:
-            frontier = max(frontier, to_ms(sealed[-1][ts_col]))
+        if ts:
+            frontier = max(frontier, ts[-1] // 1000)
         state.update(
-            (
-                [tuple(r[c] for c in out_cols) for r in pend],
-                frontier, acc, cnt, str(s2), mn, mx, first,
-                sorted(dset), prev,
-            )
+            ([tuple(r[c] for c in out_cols) for r in pend], frontier,
+             *acc.snapshot(), prev)
         )
         if held and pend:
             state.setTimeoutTimestamp(
-                max(wm_ms + 1, min(to_ms(r[ts_col]) for r in pend))
+                max(wm_ms + 1, min(_to_ms(r[ts_col]) for r in pend))
             )
-        out = pd.DataFrame(sealed, columns=out_cols)
-        for fn_name, cname in agg_list:
-            out[cname] = _over_emit_series(fn_name, emit[cname])
-        yield out
-
-    return sdf.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.EventTimeTimeout if held else GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_over_rows_bounded(
-    sdf: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str,
-    value_col: str,
-    n_rows: int,
-    payload_cols: Sequence[str] = (),
-    tiebreak_col: str | None = None,
-    aggs: "Sequence[tuple[str, str]] | None" = None,
-) -> DataFrame:
-    """Streaming OVER (PARTITION BY key ORDER BY ts ROWS BETWEEN n_rows-1
-    PRECEDING AND CURRENT ROW) with a pluggable aggregate list (same
-    contract as streaming_over_range_bounded; defaults to the legacy
-    sum+count pair frame_sum/frame_cnt).
-
-    ProcTimeRowsBoundedPrecedingFunction / RowTimeRowsBoundedPrecedingFunction
-    parity: per key a ring buffer of the last n_rows value entries —
-    state bounded by the frame size, and the ring buffer doubles as the
-    retraction store for MIN/MAX (MinWithRetractAggFunction parity
-    without a separate retract map). Integer-micros accumulation."""
-    out_cols = list(dict.fromkeys([*key_cols, ts_col, value_col, *payload_cols]))
-    agg_list = list(aggs) if aggs else [("sum", "frame_sum"), ("count", "frame_cnt")]
-    out_schema = _schema_of(sdf, out_cols) + _over_agg_schema(agg_list)
-    # prev: previous partition row's micros (LAG navigates the partition
-    # order, not the frame — LeadLagAggFunction parity); NULL before row 1
-    state_schema = "buf array<bigint>, prev bigint"
-    _Q = Decimal("0.000001")
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        buf: list[int] = list(state.get[0]) if state.exists else []
-        prev: int | None = state.get[1] if state.exists else None
-        frames = [pdf[out_cols] for pdf in pdfs]
-        sort_cols = [ts_col, tiebreak_col] if tiebreak_col else [ts_col]
-        batch = (
-            pd.concat(frames).sort_values(sort_cols)
-            if frames
-            else pd.DataFrame(columns=out_cols)
-        )
-        emit: dict[str, list] = {c: [] for _, c in agg_list}
-        # hot loop: dispatch hoisted out of the row loop (bound append
-        # methods, locals for the C-level names, sum/count inlined) —
-        # this is the sweep's 10M-row emission path
-        plans = [(fn_name, emit[cname].append) for fn_name, cname in agg_list]
-        bapp = buf.append
-        dec, q, md = Decimal, _Q, _micros_double
-        for v in batch[value_col]:
-            m = int(dec(float(v)).quantize(q, rounding=ROUND_HALF_UP) * 1_000_000)
-            bapp(m)
-            if len(buf) > n_rows:
-                del buf[0]
-            for fn_name, ap in plans:
-                if fn_name == "sum":
-                    ap(md(sum(buf)))
-                elif fn_name == "count":
-                    ap(len(buf))
-                elif fn_name == "lag":
-                    ap(None if prev is None else md(prev))
-                else:
-                    ap(_over_agg_value(fn_name, buf))
-            prev = m
-        out = batch.copy()
         for fn_name, cname in agg_list:
             out[cname] = _over_emit_series(fn_name, emit[cname], out.index)
-        state.update((buf, prev))
         yield out
 
     return sdf.groupBy(*key_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def streaming_over_running_sum(
-    sdf: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str,
-    value_col: str,
-    payload_cols: Sequence[str] = (),
-    tiebreak_col: str | None = None,
-    aggs: "Sequence[tuple[str, str]] | None" = None,
-) -> DataFrame:
-    """Streaming OVER (PARTITION BY key ORDER BY ts ROWS UNBOUNDED PRECEDING)
-    with a pluggable aggregate list (defaults to the legacy sum+count pair
-    running_sum/running_cnt): per-key accumulator state; rows within a
-    batch are processed in event-time order (the reference buffers
-    out-of-order rows until the watermark; AvailableNow replay delivers
-    whole batches, so the in-batch sort plays that role).
-
-    Over an UNBOUNDED PRECEDING frame the input is append-only, so MIN/MAX
-    are monotone O(1) accumulators (no retraction store needed — the
-    reference only swaps in Min/MaxWithRetractAggFunction for retracting
-    inputs), FIRST_VALUE latches once, LAST_VALUE is the current row."""
-    out_cols = list(dict.fromkeys([*key_cols, ts_col, value_col, *payload_cols]))
-    agg_list = (
-        list(aggs) if aggs else [("sum", "running_sum"), ("count", "running_cnt")]
-    )
-    out_schema = _schema_of(sdf, out_cols) + _over_agg_schema(agg_list)
-    # accumulators kept as integer micros: exact, order-independent
-    # (sum/count/min/max), and restart-safe (same decimal-accumulation
-    # contract as the batch layer); mn/mx/first are NULL until the first
-    # row. s2 (sum of squared micros, for VAR/STDDEV) exceeds int64 range
-    # long before the sum does, so it persists as a decimal string; dvals
-    # (the DISTINCT accumulator — the reference's DistinctAccumulator
-    # MapState, unbounded by design) is only populated when a
-    # distinct_count aggregate is requested; prev backs LAG.
-    state_schema = (
-        "acc_micros bigint, cnt bigint, mn bigint, mx bigint, first bigint, "
-        "s2 string, dvals array<bigint>, prev bigint"
-    )
-    _Q = Decimal("0.000001")
-    wants_distinct = any(fn == "distinct_count" for fn, _ in agg_list)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        acc, cnt, mn, mx, first, s2_str, dvals, prev = (
-            state.get if state.exists else (0, 0, None, None, None, "0", [], None)
-        )
-        s2 = int(s2_str)
-        dset: set[int] = set(dvals) if wants_distinct else set()
-        frames = []
-        for pdf in pdfs:
-            frames.append(pdf[out_cols])
-        sort_cols = [ts_col, tiebreak_col] if tiebreak_col else [ts_col]
-        batch = (
-            pd.concat(frames).sort_values(sort_cols)
-            if frames
-            else pd.DataFrame(columns=out_cols)
-        )
-        emit: dict[str, list] = {c: [] for _, c in agg_list}
-        # hot loop: dispatch hoisted (bound appends, locals), variance
-        # accumulation only when a variance aggregate is requested
-        plans = [(fn_name, emit[cname].append) for fn_name, cname in agg_list]
-        wants_var = any(
-            fn in ("var_pop", "var_samp", "stddev_pop", "stddev_samp")
-            for fn, _ in agg_list
-        )
-        dec, q, md = Decimal, _Q, _micros_double
-        for v in batch[value_col]:
-            m = int(dec(float(v)).quantize(q, rounding=ROUND_HALF_UP) * 1_000_000)
-            lag_val = None if prev is None else md(prev)
-            acc += m
-            cnt += 1
-            if wants_var:
-                s2 += m * m
-            mn = m if mn is None or m < mn else mn
-            mx = m if mx is None or m > mx else mx
-            if first is None:
-                first = m
-            if wants_distinct:
-                dset.add(m)
-            prev = m
-            for fn_name, ap in plans:
-                if fn_name == "sum":
-                    ap(md(acc))
-                elif fn_name == "count":
-                    ap(cnt)
-                elif fn_name == "avg":
-                    ap(md(acc) / cnt)
-                elif fn_name == "min":
-                    ap(md(mn))
-                elif fn_name == "max":
-                    ap(md(mx))
-                elif fn_name == "first_value":
-                    ap(md(first))
-                elif fn_name == "last_value":
-                    ap(md(m))
-                elif fn_name == "distinct_count":
-                    ap(len(dset))
-                elif fn_name == "lag":
-                    ap(lag_val)
-                else:  # var_pop/var_samp/stddev_pop/stddev_samp — same
-                    # fixed double op order as _over_var, from O(1) state
-                    sd = md(acc)
-                    s2d = md(s2, 12)
-                    nd = float(cnt)
-                    num = s2d - sd * sd / nd
-                    if fn_name == "var_pop":
-                        ap(num / nd)
-                    elif fn_name == "stddev_pop":
-                        ap(math.sqrt(max(num / nd, 0.0)))
-                    elif cnt < 2:
-                        ap(None)
-                    elif fn_name == "var_samp":
-                        ap(num / (nd - 1.0))
-                    else:  # stddev_samp
-                        ap(math.sqrt(max(num / (nd - 1.0), 0.0)))
-        batch = batch.copy()
-        for fn_name, cname in agg_list:
-            batch[cname] = _over_emit_series(fn_name, emit[cname], batch.index)
-        state.update(
-            (acc, cnt, mn, mx, first, str(s2), sorted(dset), prev)
-        )
-        yield batch
-
-    return sdf.groupBy(*key_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        fn,
+        out_schema,
+        state_schema,
+        "append",
+        GroupStateTimeout.EventTimeTimeout if held else GroupStateTimeout.NoTimeout,
     )
 
 

@@ -172,9 +172,7 @@ def test_over_range_bounded_out_of_order_across_batches(spark):
 
     import pandas as pd
 
-    from flink_parent_spark.streaming.stateful import (
-        streaming_over_range_bounded,
-    )
+    from flink_parent_spark.streaming.stateful import streaming_over
 
     T = dtm.datetime(2024, 1, 1)
 
@@ -195,8 +193,10 @@ def test_over_range_bounded_out_of_order_across_batches(spark):
         .parquet(d)
         .withWatermark("ts", "30 minutes")
     )
-    out = streaming_over_range_bounded(
-        sdf, ["user_id"], "ts", "value", 1800, ["event_id"], tiebreak_col="event_id"
+    out = streaming_over(
+        sdf, ["user_id"], "ts", "value", ("range", 1800),
+        [("sum", "range_sum"), ("count", "range_cnt")], ["event_id"],
+        tiebreak_col="event_id",
     )
     got = run_stream_to_df(out, "append").toPandas()
 
@@ -1173,11 +1173,7 @@ def test_streaming_over_full_aggregate_set(spark):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from flink_parent_spark.streaming.stateful import (
-        streaming_over_range_bounded,
-        streaming_over_rows_bounded,
-        streaming_over_running_sum,
-    )
+    from flink_parent_spark.streaming.stateful import streaming_over
 
     T = dtm.datetime(2024, 1, 1)
     rows = [
@@ -1255,9 +1251,9 @@ def test_streaming_over_full_aggregate_set(spark):
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     got = got_map(
-        streaming_over_running_sum(
-            stream(), ["user_id"], "ts", "value", ["event_id"],
-            tiebreak_col="event_id", aggs=aggs,
+        streaming_over(
+            stream(), ["user_id"], "ts", "value", ("rows", None), aggs,
+            ["event_id"], tiebreak_col="event_id",
         )
     )
     exp = {k: v for k, v in batch_expect(w).items() if k != 99}
@@ -1270,9 +1266,9 @@ def test_streaming_over_full_aggregate_set(spark):
         .rowsBetween(-2, Window.currentRow)
     )
     got = got_map(
-        streaming_over_rows_bounded(
-            stream(), ["user_id"], "ts", "value", 3, ["event_id"],
-            tiebreak_col="event_id", aggs=aggs,
+        streaming_over(
+            stream(), ["user_id"], "ts", "value", ("rows", 3), aggs,
+            ["event_id"], tiebreak_col="event_id",
         )
     )
     exp = {k: v for k, v in batch_expect(w).items() if k != 99}
@@ -1285,10 +1281,10 @@ def test_streaming_over_full_aggregate_set(spark):
         .rangeBetween(-1800, Window.currentRow)
     )
     got = got_map(
-        streaming_over_range_bounded(
+        streaming_over(
             stream().withWatermark("ts", "30 minutes"),
-            ["user_id"], "ts", "value", 1800, ["event_id"],
-            tiebreak_col="event_id", aggs=aggs,
+            ["user_id"], "ts", "value", ("range", 1800), aggs, ["event_id"],
+            tiebreak_col="event_id",
         )
     )
     exp = {k: v for k, v in batch_expect(w).items() if k != 99}
@@ -1310,11 +1306,7 @@ def test_streaming_over_var_distinct_lag_vs_duckdb(spark):
     import duckdb
     import pandas as pd
 
-    from flink_parent_spark.streaming.stateful import (
-        streaming_over_range_bounded,
-        streaming_over_rows_bounded,
-        streaming_over_running_sum,
-    )
+    from flink_parent_spark.streaming.stateful import streaming_over
 
     T = dtm.datetime(2024, 1, 1)
     rows = [
@@ -1397,24 +1389,24 @@ def test_streaming_over_var_distinct_lag_vs_duckdb(spark):
         )
 
     assert got(
-        streaming_over_running_sum(
-            stream(), ["user_id"], "ts", "value", ["event_id"],
-            tiebreak_col="event_id", aggs=aggs,
+        streaming_over(
+            stream(), ["user_id"], "ts", "value", ("rows", None), aggs,
+            ["event_id"], tiebreak_col="event_id",
         )
     ) == oracle("ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING")
 
     assert got(
-        streaming_over_rows_bounded(
-            stream(), ["user_id"], "ts", "value", 3, ["event_id"],
-            tiebreak_col="event_id", aggs=aggs,
+        streaming_over(
+            stream(), ["user_id"], "ts", "value", ("rows", 3), aggs,
+            ["event_id"], tiebreak_col="event_id",
         )
     ) == oracle("ORDER BY ts, event_id ROWS BETWEEN 2 PRECEDING AND CURRENT ROW")
 
     assert got(
-        streaming_over_range_bounded(
+        streaming_over(
             stream().withWatermark("ts", "30 minutes"),
-            ["user_id"], "ts", "value", 1800, ["event_id"],
-            tiebreak_col="event_id", aggs=aggs,
+            ["user_id"], "ts", "value", ("range", 1800), aggs, ["event_id"],
+            tiebreak_col="event_id",
         )
     ) == oracle(
         "ORDER BY ts RANGE BETWEEN INTERVAL '30' MINUTE PRECEDING AND CURRENT ROW"
@@ -1423,15 +1415,11 @@ def test_streaming_over_var_distinct_lag_vs_duckdb(spark):
     # --- RANGE UNBOUNDED PRECEDING (SQL's default ORDER BY frame; peers
     # share one result — the 4th cell of the rows/range×bounded/unbounded
     # matrix, RowTimeRangeUnboundedPrecedingFunction parity) ---
-    from flink_parent_spark.streaming.stateful import (
-        streaming_over_range_unbounded,
-    )
-
     assert got(
-        streaming_over_range_unbounded(
+        streaming_over(
             stream().withWatermark("ts", "30 minutes"),
-            ["user_id"], "ts", "value", ["event_id"],
-            tiebreak_col="event_id", aggs=aggs,
+            ["user_id"], "ts", "value", ("range", None), aggs, ["event_id"],
+            tiebreak_col="event_id",
         )
     ) == oracle(
         "ORDER BY ts RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
@@ -1448,10 +1436,10 @@ def test_streaming_over_var_distinct_lag_vs_duckdb(spark):
             r["b_sum"], int(r["b_cnt"]), r["b_avg"], r["b_min"], r["b_max"]
         )
         for r in run_stream_to_df(
-            streaming_over_range_unbounded(
+            streaming_over(
                 stream().withWatermark("ts", "30 minutes"),
-                ["user_id"], "ts", "value", ["event_id"],
-                tiebreak_col="event_id", aggs=base,
+                ["user_id"], "ts", "value", ("range", None), base,
+                ["event_id"], tiebreak_col="event_id",
             ),
             "append",
         ).collect()
@@ -1488,9 +1476,7 @@ def test_restart_recovers_over_var_distinct_lag_state(spark):
 
     import pandas as pd
 
-    from flink_parent_spark.streaming.stateful import (
-        streaming_over_running_sum,
-    )
+    from flink_parent_spark.streaming.stateful import streaming_over
 
     t0 = dtm.datetime(2024, 5, 1)
     tag = _uuid.uuid4().hex[:8]
@@ -1503,13 +1489,14 @@ def test_restart_recovers_over_var_distinct_lag_state(spark):
     )
 
     def build(sdf):
-        return streaming_over_running_sum(
-            sdf, ["user_id"], "ts", "value", ["event_id"],
-            tiebreak_col="event_id",
-            aggs=[
+        return streaming_over(
+            sdf, ["user_id"], "ts", "value", ("rows", None),
+            [
                 ("var_pop", "vp"), ("stddev_samp", "ss"),
                 ("distinct_count", "dc"), ("lag", "lg"), ("sum", "sm"),
             ],
+            ["event_id"],
+            tiebreak_col="event_id",
         )
 
     ckpt = os.path.join(tempfile.gettempdir(), f"fps_ckpt_ov_{tag}")
@@ -1541,6 +1528,102 @@ def test_restart_recovers_over_var_distinct_lag_state(spark):
     assert by_id[3].dc == 3
     assert by_id[3].sm == 19.0         # recovered sum accumulator
     assert part2["event_id"].min() == 2  # batch-0 rows not re-emitted
+
+
+def test_restart_recovers_over_range_held_state(spark):
+    """Restart-from-checkpoint for the watermark-held RANGE-bounded OVER
+    frame, stopped while rows are still held: the held rows (`pend`), the
+    live frame buffer (`buf`) and the fired frontier must all round-trip
+    state recovery. Held pre-crash rows fire after the restart against
+    the recovered frame, a post-restart out-of-order row (within the
+    delay) slots in by event time, and a row behind the watermark is
+    dropped — interrupted output equals the uninterrupted run and the
+    batch RANGE window."""
+    import datetime as dtm
+    import uuid as _uuid
+
+    import pandas as pd
+
+    from flink_parent_spark.streaming.stateful import streaming_over
+
+    t0 = dtm.datetime(2024, 5, 1)
+    tag = _uuid.uuid4().hex[:8]
+    schema = "ts timestamp, user_id long, event_id long, value double"
+    d = tempfile.mkdtemp(prefix=f"fps_ckpt_ovr_{tag}_")
+
+    def ev(minute, user, eid, v):
+        return (t0 + dtm.timedelta(minutes=minute), user, eid, float(v))
+
+    # batch 0 moves the watermark (30-minute delay) to minute 30; batch 1
+    # fires up to it and then to minute 60, leaving minutes 70 (user 1)
+    # and 90 (user 2) held when the query stops
+    _add_batch_file(
+        spark, d, 0,
+        [ev(0, 1, 0, 1), ev(10, 1, 1, 2), ev(20, 1, 2, 4), ev(60, 1, 3, 8),
+         ev(5, 2, 4, 10)],
+        schema,
+    )
+    _add_batch_file(
+        spark, d, 1,
+        [ev(40, 1, 5, 16), ev(70, 1, 6, 32), ev(50, 2, 7, 20),
+         ev(90, 2, 8, 1.5)],
+        schema,
+    )
+
+    def build(sdf):
+        return streaming_over(
+            sdf.withWatermark("ts", "30 minutes"),
+            ["user_id"], "ts", "value", ("range", 1800),
+            [("sum", "sm"), ("count", "cnt"), ("min", "mn"), ("max", "mx")],
+            ["event_id"],
+            tiebreak_col="event_id",
+        )
+
+    ckpt = os.path.join(tempfile.gettempdir(), f"fps_ckpt_ovr_{tag}")
+    part1 = _drain(spark, d, schema, build, ckpt, mode="append")
+    # while down: an out-of-order row (65 < held 70, past the frontier), a
+    # late row behind the fired frontier (15), fresh rows, and an advancer
+    # (user 9) that seals everything else
+    _add_batch_file(
+        spark, d, 2,
+        [ev(65, 1, 9, 64), ev(15, 1, 12, 100), ev(130, 1, 10, 0.25),
+         ev(100, 2, 11, 3), ev(600, 9, 99, 0)],
+        schema,
+    )
+    part2 = _drain(spark, d, schema, build, ckpt, mode="append")
+    uninterrupted = _drain(
+        spark, d, schema, build,
+        os.path.join(tempfile.gettempdir(), f"fps_ckpt_ovr_ref_{tag}"),
+        mode="append",
+    )
+    cols = ["event_id", "sm", "cnt", "mn", "mx"]
+    got = (
+        pd.concat([part1, part2])[cols]
+        .sort_values("event_id").reset_index(drop=True)
+    )
+    exp = uninterrupted[cols].sort_values("event_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, exp)
+    # the rows held at the stop fire after the restart, exactly once
+    assert {6, 8} <= set(part2["event_id"])
+    assert not set(part1["event_id"]) & set(part2["event_id"])
+    # trailing 30-minute frames, boundary inclusive; event 12 is late
+    assert {
+        int(r.event_id): (r.sm, int(r.cnt), r.mn, r.mx)
+        for r in got.itertuples()
+    } == {
+        0: (1.0, 1, 1.0, 1.0),
+        1: (3.0, 2, 1.0, 2.0),
+        2: (7.0, 3, 1.0, 4.0),
+        5: (22.0, 3, 2.0, 16.0),
+        3: (24.0, 2, 8.0, 16.0),
+        9: (88.0, 3, 8.0, 64.0),
+        6: (120.0, 4, 8.0, 64.0),
+        10: (0.25, 1, 0.25, 0.25),
+        4: (10.0, 1, 10.0, 10.0),
+        7: (20.0, 1, 20.0, 20.0),
+        8: (1.5, 1, 1.5, 1.5),
+        11: (4.5, 2, 1.5, 3.0),
+    }
 
 
 def test_restart_recovers_match_recognize_prev_context(spark):

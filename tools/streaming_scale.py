@@ -260,14 +260,15 @@ def main() -> None:
         # the stream; throughput is the applyInPandasWithState ordered-
         # replay cost on a real multi-batch run
         from flink_parent_spark.streaming.stateful import (  # noqa: PLC0415
-            streaming_over_rows_bounded,
+            streaming_over,
         )
 
         ev = open_stream(spark, p)
         return run_stream_to_df(
-            streaming_over_rows_bounded(
+            streaming_over(
                 ev.select("user_id", "ts", "value", "event_id"),
-                ["user_id"], "ts", "value", 5, ["event_id"],
+                ["user_id"], "ts", "value", ("rows", 5),
+                [("sum", "frame_sum"), ("count", "frame_cnt")], ["event_id"],
                 tiebreak_col="event_id",
             ),
             "append",
@@ -281,17 +282,18 @@ def main() -> None:
         # where the frame-recompute predecessor was O(rows x frame);
         # 30-minute trailing frame, mixed aggregate list
         from flink_parent_spark.streaming.stateful import (  # noqa: PLC0415
-            streaming_over_range_bounded,
+            streaming_over,
         )
 
         ev = open_stream(spark, p)
         return run_stream_to_df(
-            streaming_over_range_bounded(
+            streaming_over(
                 ev.select("user_id", "ts", "value", "event_id"),
-                ["user_id"], "ts", "value", 1800, ["event_id"],
+                ["user_id"], "ts", "value", ("range", 1800),
+                [("sum", "w_sum"), ("count", "w_cnt"),
+                 ("min", "w_min"), ("max", "w_max")],
+                ["event_id"],
                 tiebreak_col="event_id",
-                aggs=[("sum", "w_sum"), ("count", "w_cnt"),
-                      ("min", "w_min"), ("max", "w_max")],
             ),
             "append",
             timeout_s=1800,
