@@ -11,12 +11,13 @@ is a thin adapter over its query catalog.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_parent_spark.queries.catalog import all_oracles, all_queries  # noqa: E402
 

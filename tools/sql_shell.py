@@ -15,9 +15,10 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_parent_spark.api.table_env import Table, TableEnvironment  # noqa: E402
 
