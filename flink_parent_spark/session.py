@@ -1,20 +1,30 @@
-"""SparkSession construction with scale-aware defaults.
+"""SparkSession construction with defaults sized to the host.
 
 The reference engine's equivalent is TableEnvironment creation
 (flink-table-api-java/.../internal/TableEnvironmentImpl.java); here a session is
 just a configured SparkSession — Catalyst/Tungsten replace the blink planner and
 runtime wholesale.
 
-Settings rationale (targets a 1000-executor cluster even though tests run
-locally on one host):
-- AQE on: runtime re-planning (skew-join splitting, partition coalescing,
-  broadcast demotion) is the single biggest scale lever Spark has.
-- shuffle.partitions sized to cores locally; on a real cluster this would be
-  2-3x total cores — AQE coalescing makes over-provisioning cheap.
+Settings rationale (what each does on the one host a session runs on):
+- AQE on: runtime re-planning coalesces the small shuffle partitions a
+  selective query leaves behind, splits skewed join partitions and demotes
+  joins whose build side turned out small to broadcast.
+- shuffle.partitions equals the local cores, so every shuffle stage keeps
+  each core busy with one task and pays no per-task overhead beyond that.
 - UTC session timezone: deterministic timestamp semantics, and matches the
   DuckDB oracle used by the correctness harness.
 - Arrow on: every pandas-UDF-backed operator (CEP, temporal join, multimodal)
   moves batches over Arrow instead of pickled rows.
+- Up to CODEGEN_CACHE_ENTRIES compiled classes
+  (`spark.sql.codegen.cache.maxEntries`; Spark's default is 100). Spark
+  compiles each distinct generated source (whole-stage code, projections,
+  predicates) once with Janino and keeps the class in an LRU cache keyed by
+  that source. One pass of the benchmark's `sql_batch` mix generates about
+  270 classes, so the default cache had evicted a request's classes before
+  the request came round again: on a 4-core host the timed pass after the
+  warm-up recompiled 263-276 classes (about 1.2 s of Janino time) and ran
+  each one before the JIT had seen it. With 1 000 entries the same pass
+  compiles 0-6. It is a static conf, so only sessions built here get it.
 - Python workers fork from `flink_parent_spark.worker_daemon`
   (`spark.python.daemon.module`), pyspark's daemon with one change: the
   `importlib.invalidate_caches()` pyspark's worker makes at the start of every
@@ -41,6 +51,9 @@ _CHECKOUT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # not ours to fix).
 os.environ.setdefault("PYTHONWARNINGS", "ignore::FutureWarning")
 
+# About 4x the ~270 classes one `sql_batch` pass generates (see above).
+CODEGEN_CACHE_ENTRIES = 1000
+
 # Runtime-settable confs that every entry point applies even when handed a
 # foreign SparkSession (the correctness driver builds its own session).
 RUNTIME_CONFS: dict[str, str] = {
@@ -49,8 +62,9 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # parquet scans: keep splits big enough that task scheduling overhead
-    # doesn't dominate at 100 TB (128m default is right; pin explicitly).
+    # parquet scans: splits of at most 128 MB (Spark's default, pinned so a
+    # foreign session reads alike); files this small are split by total
+    # size over the cores instead.
     "spark.sql.files.maxPartitionBytes": "134217728",
 }
 
@@ -123,6 +137,7 @@ def get_spark(app_name: str = "flink_parent_spark", cpus: int | None = None) -> 
         .config("spark.sql.warehouse.dir", f"{tmp}/fps_warehouse")
         .config("spark.python.daemon.module", "flink_parent_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _CHECKOUT_ROOT)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -16,7 +16,7 @@ SF_DIR = "/root/testdata/sf0.001"  # fast correctness scale for unit tests
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("tests", cpus=8)
+    spark = get_spark("tests")
     yield spark
 
 

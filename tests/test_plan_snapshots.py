@@ -57,14 +57,15 @@ def test_snapshot_dir_has_no_orphans():
 
 def test_normalize_plan_masks_only_the_partition_count():
     """The trailing count of a partitioning call depends on the session's
-    shuffle setting and is masked; literals inside its keys are plan shape
-    and stay, e.g. the 0 of coalesce(x, 0)."""
+    shuffle setting or the host's cores and is masked; literals inside its
+    keys are plan shape and stay, e.g. the 0 of coalesce(x, 0)."""
     raw = (
         "Arguments: hashpartitioning(coalesce(i_brand_id#12L, 0), "
         "isnull(i_brand_id#12L), coalesce(i_class_id#13L, 0), 32), "
         "ENSURE_REQUIREMENTS, [plan_id=71]\n"
         "Arguments: rangepartitioning(x#4 ASC NULLS FIRST, 4), "
         "ENSURE_REQUIREMENTS, [plan_id=9]\n"
+        "Arguments: RoundRobinPartitioning(8), REPARTITION_BY_NUM, [plan_id=3]\n"
     )
     assert normalize_plan(raw) == (
         "Arguments: hashpartitioning(coalesce(i_brand_id#L, 0), "
@@ -72,4 +73,5 @@ def test_normalize_plan_masks_only_the_partition_count():
         "ENSURE_REQUIREMENTS, [plan_id=]\n"
         "Arguments: rangepartitioning(x# ASC NULLS FIRST, N), "
         "ENSURE_REQUIREMENTS, [plan_id=]\n"
+        "Arguments: RoundRobinPartitioning(N), REPARTITION_BY_NUM, [plan_id=]\n"
     )

@@ -230,7 +230,7 @@ def test_spread_passes_through_presplit_input(spark):
     narrow = spark.read.parquet(d)
     assert len(narrow.inputFiles()) < target
     plan = plan_of(spread(narrow))
-    assert "roundrobin" in plan.lower()
+    assert f"RoundRobinPartitioning({target})" in plan
 
 
 def test_kmeans_training_input_is_bounded(spark):

@@ -114,9 +114,10 @@ def normalize_plan(s: str) -> str:
     s = re.sub(
         r"(file:)?/[^\s\],]*/([^/\s\],]+)", r"<path>/\2", s
     )
-    # partition counts follow the session's shuffle setting, not the plan
-    # shape
+    # partition counts follow the session's shuffle setting or the host's
+    # cores (the round-robin spread), not the plan shape
     s = _mask_partition_counts(s)
+    s = re.sub(r"RoundRobinPartitioning\(\d+\)", "RoundRobinPartitioning(N)", s)
     s = re.sub(r"REPARTITION(_BY_NUM)?\(\d+\)", r"REPARTITION(N)", s)
     # InMemoryFileIndex may enumerate a machine-dependent number of files
     s = re.sub(r"InMemoryFileIndex \[([^\]]*)\.{3}[^\]]*\]",
@@ -140,7 +141,7 @@ def main() -> None:
 
     names = sys.argv[1:] or SNAPSHOT_QUERIES
     os.makedirs(SNAP_DIR, exist_ok=True)
-    spark = get_spark("plan_snapshots", cpus=8)
+    spark = get_spark("plan_snapshots")
     for name in names:
         p = plan_for(spark, name)
         with open(os.path.join(SNAP_DIR, f"{name}.txt"), "w") as f:
